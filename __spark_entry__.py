@@ -1123,7 +1123,7 @@ def q_quality_logs_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         f.write("patient_id,given_name,family_name,dob,sex,height,weight\n")
         f.write("\n".join(lines) + "\n")
 
-    _clean, logs = patients.run(spark, path, persist_intermediates=True)
+    _clean, logs = patients.run(spark, path)
     return (
         logs.groupBy("column_name", "reason")
         .agg(
@@ -5083,11 +5083,12 @@ def q_incremental_minhash_documents(spark: SparkSession, sf_dir: str) -> DataFra
         portable=True,
         batch_signatures=batch_sig,
         history_signatures=hist_sig,
-        # eager=False keeps the gate's dataflow lazy (plan-visible) and
-        # lets plan-identical caches be reused across bench rounds;
-        # eager=True (the production ingest default) releases every
-        # cache per call — correct when every batch is new data, but it
-        # doubles this REPLAYED-batch query's cost for no information.
+        # eager=False keeps the gate's dataflow lazy (plan-visible): the
+        # internal persists serve the one action that consumes the result
+        # and are released with the caller's scoped caches. eager=True
+        # (the production ingest default) materializes the outputs and
+        # releases the internal caches inside the call — a second pass
+        # over this replayed batch for no information.
         eager=False,
     )
     delta_counts = delta.groupBy(F.col("keeper_id").alias("doc_id")).agg(

@@ -34,7 +34,7 @@ import csv
 import io
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-from urllib.parse import parse_qs, urlparse
+from urllib.parse import parse_qs, quote, urlencode, urlparse
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -57,6 +57,14 @@ _STYLE = (
     "td,th{border:1px solid #ccc;padding:2px 6px}svg{display:block;margin:12px 0}"
     "</style>"
 )
+
+
+def _link(route: str, **params) -> str:
+    """``/route?k=v&…`` with percent-encoded values: a raw ``+`` or space
+    in a value (``duplicate encounter_id + code``) would reach the
+    handler as a different string. The result has no HTML-special
+    characters left to escape."""
+    return f"/{route}?{urlencode(params, quote_via=quote)}"
 
 
 def _page(title: str, body: str) -> bytes:
@@ -92,7 +100,7 @@ class DashboardApp:
 
     def index(self, params: dict) -> bytes:
         links = "".join(
-            f"<li><a href='/table?name={_esc(n)}'>{_esc(n)}</a></li>"
+            f"<li><a href='{_link('table', name=n)}'>{_esc(n)}</a></li>"
             for n in self.tables
         )
         return _page("ETL Data Distribution Dashboard", f"<ul>{links}</ul>")
@@ -105,23 +113,23 @@ class DashboardApp:
         pickers = []
         for c in kinds["numeric"]:
             pickers.append(
-                f"<li><a href='/histogram?table={name}&column={c}&bins=30'>"
+                f"<li><a href='{_link('histogram', table=name, column=c, bins=30)}'>"
                 f"histogram of {_esc(c)}</a></li>"
             )
         for c in kinds["datetime"]:
             pickers.append(
-                f"<li><a href='/timeline?table={name}&column={c}&bins=50'>"
+                f"<li><a href='{_link('timeline', table=name, column=c, bins=50)}'>"
                 f"records over time by {_esc(c)}</a></li>"
             )
         for c in kinds["categorical"]:
             pickers.append(
-                f"<li><a href='/categories?table={name}&column={c}&k=10'>"
+                f"<li><a href='{_link('categories', table=name, column=c, k=10)}'>"
                 f"top values of {_esc(c)}</a></li>"
             )
         if len(kinds["numeric"]) >= 2:
             x, y = kinds["numeric"][:2]
             pickers.append(
-                f"<li><a href='/scatter?table={name}&x={x}&y={y}'>"
+                f"<li><a href='{_link('scatter', table=name, x=x, y=y)}'>"
                 f"scatter {_esc(y)} vs {_esc(x)}</a></li>"
             )
         body = f"<h3>Preview of {_esc(name)}</h3>{preview}<ul>{''.join(pickers)}</ul>"
@@ -182,8 +190,8 @@ class DashboardApp:
         rep = quality_report(logs)
         reasons = rep["reason_counts"].collect()
         drill = "".join(
-            f"<li><a href='/drilldown?reason={_esc(r['reason'])}'>{_esc(r['reason'])}"
-            f"</a> (<a href='/download?reason={_esc(r['reason'])}'>csv</a>)</li>"
+            f"<li><a href='{_link('drilldown', reason=r['reason'])}'>{_esc(r['reason'])}"
+            f"</a> (<a href='{_link('download', reason=r['reason'])}'>csv</a>)</li>"
             for r in reasons
         )
         body = "\n".join(

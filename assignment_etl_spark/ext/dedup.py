@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from assignment_etl_spark.caching import release, scope, scoped_persist
 from assignment_etl_spark.ext.text import fingerprint
 
 # Mersenne prime + LCG-style universal hashing for minhash permutations.
@@ -338,14 +339,14 @@ def _sig_frame(
         # array_min(transform(...)) branches embeds its child wholesale,
         # so unmaterialized grams would be recomputed 32× per row
         # (measured: 50× slower without these barriers at 500 docs).
-        cps = df.select(
+        cps = scoped_persist(df.select(
             F.col(id_col).alias("_id"),
             portable_codepoints(F.col(text_col), shingle_n).alias("_cp"),
-        ).persist()
-        grams = cps.select(
+        ))
+        grams = scoped_persist(cps.select(
             "_id",
             portable_gram_hashes_from_cp(F.col("_cp"), shingle_n).alias("_gh"),
-        ).persist()
+        ))
         mins = [
             F.array_min(
                 F.transform(F.col("_gh"), lambda h: (F.lit(a) * h + F.lit(b)) % PORTABLE_P)
@@ -355,12 +356,10 @@ def _sig_frame(
         # materialize signatures here, then drop the scaffolding caches —
         # repeated callers would otherwise accumulate two cached frames
         # (codepoints ≈ 4× the text size) per invocation
-        from assignment_etl_spark.caching import scoped_persist
-
         sig = scoped_persist(grams.select("_id", F.array(*mins).alias("_sig")))
         sig.count()
-        cps.unpersist()
-        grams.unpersist()
+        release(cps)
+        release(grams)
         return sig  # already persisted + materialized above
     elif use_numpy:
         sig_udf = make_minhash_signature_udf(num_hashes, shingle_n, seed)
@@ -374,8 +373,6 @@ def _sig_frame(
                 shingles(F.col(text_col), shingle_n), num_hashes, seed
             ).alias("_sig"),
         )
-    from assignment_etl_spark.caching import scoped_persist
-
     return scoped_persist(sig)
 
 
@@ -495,19 +492,19 @@ def cluster_pairs(
     shallow (dup clusters are cliques-ish), so this converges in 2-3
     rounds in practice. Each round is one shuffle on node id; frames are
     persisted per round and the loop stops when no label changes (checked
-    with a cheap aggregate, not a collect of the data).
+    with a cheap aggregate, not a collect of the data). Each round releases
+    the previous round's labels; the returned labels stay cached in the
+    caller's ``caching`` scope.
     """
-    edges = (
+    edges = scoped_persist(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .unionByName(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
         .distinct()
-        .persist()
     )
-    labels = (
+    labels = scoped_persist(
         edges.select(F.col("src").alias("node"))
         .distinct()
         .withColumn("cluster", F.col("node"))
-        .persist()
     )
     for _ in range(max_iterations):
         neighbor_min = (
@@ -515,7 +512,7 @@ def cluster_pairs(
             .groupBy("src")
             .agg(F.min("cluster").alias("n_cluster"))
         )
-        new_labels = (
+        new_labels = scoped_persist(
             labels.join(neighbor_min, labels.node == neighbor_min.src, "left")
             .select(
                 "node",
@@ -523,7 +520,6 @@ def cluster_pairs(
                     F.col("cluster"), F.coalesce(F.col("n_cluster"), F.col("cluster"))
                 ).alias("cluster"),
             )
-            .persist()
         )
         changed = (
             new_labels.alias("n")
@@ -532,11 +528,11 @@ def cluster_pairs(
             .limit(1)
             .count()
         )
-        labels.unpersist()
+        release(labels)
         labels = new_labels
         if changed == 0:
             break
-    edges.unpersist()
+    release(edges)
     return labels
 
 
@@ -763,8 +759,8 @@ def compact_band_store(
     # here are fixed-width (band, bhash, keeper_id), so row fraction
     # tracks byte fraction); the survivors are persisted so the sizing
     # count and the rewrite share one anti-join evaluation.
-    live = tombstone_band_store(store, deleted_keys, key_col=key_col).persist()
-    try:
+    with scope():
+        live = scoped_persist(tombstone_band_store(store, deleted_keys, key_col=key_col))
         live_rows = live.count()
         total_rows = store.count()
         live_bytes = total if total_rows == 0 else total * (live_rows / total_rows)
@@ -774,8 +770,6 @@ def compact_band_store(
             .sortWithinPartitions("band", "bhash"),
             path,
         )
-    finally:
-        live.unpersist()
     return n
 
 
@@ -834,12 +828,13 @@ def incremental_minhash_dedup(
     contract): materialize ``band_delta`` and ``dropped`` NOW, then
     release every internal cache (signatures, drop lists, keeper
     signatures) so per-batch ingest does not accumulate executor storage
-    across batches. The caller should unpersist the two returned
-    persisted frames after appending the delta / sinking the audit rows.
+    across batches. The two returned persisted frames belong to the
+    caller's ``caching`` scope (or the root): the caller releases them
+    after appending the delta / sinking the audit rows.
     ``eager=False`` keeps the round-7 lazy behavior (the full dataflow
     stays visible in the returned frames' plans — what the
     per-batch-cost plan test inspects) but then the internal persists
-    live until the session drops them.
+    live until the caller's scope releases them.
 
     Returns ``(survivors, band_delta, dropped)``:
       - ``survivors``: batch rows that are new to the corpus;
@@ -938,11 +933,10 @@ def incremental_minhash_dedup(
     # count), but every returned frame — survivors, delta, dropped — hangs
     # off them, and without a barrier each consumer re-executes the whole
     # LSH self-join + exact-verify subtree (measured 50s → 11s at sf0.001)
-    dropped_batch = (
+    dropped_batch = scoped_persist(
         pairs.groupBy(F.col("id_b").alias(id_col))
         .agg(F.min("id_a").alias("keeper"))
         .withColumn("reason", F.lit("dup_batch"))
-        .persist()
     )
 
     surv_banded = banded.join(
@@ -990,7 +984,7 @@ def incremental_minhash_dedup(
             # cut a batch doc with exact Jaccard ≥ t but signature
             # agreement < t is dropped incrementally yet kept by the
             # full-corpus run.
-            ver = cand.persist()  # semi-join + est join both consume it
+            ver = scoped_persist(cand)  # semi-join + est join both consume it
             cand_est = ver
             if history_signatures is not None:
                 # the store build already signed every history text —
@@ -1039,11 +1033,10 @@ def incremental_minhash_dedup(
                 .filter(est2 >= F.lit(jaccard_threshold))
                 .select("_id", "keeper_id")
             )
-        dropped_hist = (
+        dropped_hist = scoped_persist(
             cand.groupBy(F.col("_id").alias(id_col))
             .agg(F.min("keeper_id").alias("keeper"))
             .withColumn("reason", F.lit("dup_history"))
-            .persist()
         )
         dropped = dropped_batch.unionByName(dropped_hist)
         surv_banded = surv_banded.join(
@@ -1062,21 +1055,18 @@ def incremental_minhash_dedup(
     if eager:
         # materialize the two data-bearing outputs, then drop every
         # internal cache — per-batch ingest must not accumulate executor
-        # storage across batches (see docstring; caller unpersists the
-        # returned frames after the band_delta append / audit sink)
-        band_delta = band_delta.persist()
-        dropped_out = dropped_out.persist()
+        # storage across batches (see docstring; the caller's scope owns
+        # the returned frames)
+        band_delta = scoped_persist(band_delta)
+        dropped_out = scoped_persist(dropped_out)
         band_delta.count()
         dropped_out.count()
+        internal = [dropped_batch, dropped_hist, cand_est, keeper_sig_frame]
         if batch_signatures is None:  # caller-passed frames are caller-owned
-            sig.unpersist()
-        dropped_batch.unpersist()
-        if dropped_hist is not None:
-            dropped_hist.unpersist()
-        if cand_est is not None:
-            cand_est.unpersist()
-        if keeper_sig_frame is not None:
-            keeper_sig_frame.unpersist()
+            internal.append(sig)
+        for df in internal:
+            if df is not None:
+                release(df)
         dropped = dropped_out
     survivors = batch.join(
         dropped.select(id_col), on=id_col, how="left_anti"

@@ -471,7 +471,7 @@ def build_ivf_index(
 
     Lifecycle: the returned frame IS the index and is persisted (the
     materialization barrier the plan depends on) — the CALLER owns it
-    and releases it with ``assigned.unpersist()`` once done querying
+    and releases it with ``caching.release(assigned)`` once done querying
     (or after writing it out as the bucketed table). Rebuilding the
     index in a loop without unpersisting accumulates executor storage.
     """

@@ -17,6 +17,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from assignment_etl_spark.caching import scope, scoped_persist
+
 # per-batch sinks sever lineage from the table they rewrite; the scoped
 # form releases each batch's checkpoint RDD after the write (a bare
 # localCheckpoint leaks one RDD per BATCH past clearCache — see the
@@ -250,17 +252,17 @@ def stream_clean_with_quality(
     ``clean_fn`` is any batch operator ``DataFrame -> (clean_df, log_df)``;
     each micro-batch runs it once and writes BOTH sinks via foreachBatch —
     the shared intermediate is computed per batch, never twice, and the
-    audit log stays exactly-once alongside the data (same epoch id).
+    audit log stays exactly-once alongside the data (same epoch id). Each
+    batch runs in its own ``caching.scope()``, so the batch cache and
+    whatever ``clean_fn`` persists are released once both sinks are
+    written.
     """
 
     def write_both(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            clean, logs = clean_fn(batch_df)
+        with scope():
+            clean, logs = clean_fn(scoped_persist(batch_df))
             clean.write.mode("append").parquet(clean_path)
             logs.write.mode("append").parquet(logs_path)
-        finally:
-            batch_df.unpersist()
 
     return (
         stream_df.writeStream.foreachBatch(write_both)

@@ -22,11 +22,10 @@ contract protects them across Spark versions):
   dropping the origin plan's preserved (product-inflatable) statistics
   (`io/store.stats_severed_local_checkpoint`; the round-11
   BigInteger-planning pathology).
-- ``cache_manager_is_empty / persistent_rdd_ids`` — session-level
-  cache/persistence introspection for the scale sweeps' measurement
-  discipline (tools/scale_curves3) and io/store's fallback-only
-  checkpoint-release id diff (r12: the last raw crossings outside this
-  module, migrated in).
+- ``cache_manager_is_empty / persistent_rdd_ids / unpersist_rdd`` —
+  session-level cache/persistence introspection for the scale sweeps'
+  measurement discipline (tools/scale_curves3) and io/store's
+  checkpoint release (exact RDD, or the fallback-only id diff).
 
 Every caller has a graceful fallback (slower, never wrong), so a Spark
 bump that removes one of these methods degrades silently — scattered
@@ -133,6 +132,14 @@ def persistent_rdd_ids(spark) -> dict[int, object]:
     pre/post id diff when the LogicalRDD capture path is unavailable."""
     jmap = spark.sparkContext._jsc.getPersistentRDDs()
     return {int(k): jmap.get(k) for k in jmap.keySet().toArray()}
+
+
+def unpersist_rdd(jrdd) -> None:
+    """Non-blocking ``unpersist`` of a JVM RDD handle (a checkpoint RDD
+    from :func:`checkpoint_rdd` or :func:`persistent_rdd_ids`) — the
+    release half of io/store's scoped ``localCheckpoint``. DataFrame
+    caches are released through ``caching``, never here."""
+    jrdd.unpersist(False)
 
 
 def probe(spark) -> dict[str, str | None]:

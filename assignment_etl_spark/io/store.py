@@ -138,11 +138,11 @@ def released_local_checkpoint(df: DataFrame):
         yield ck
     finally:
         if jrdd is not None:
-            jrdd.unpersist(False)
+            internals.unpersist_rdd(jrdd)
         elif before is not None:
             for rid, jr in internals.persistent_rdd_ids(spark).items():
                 if rid not in before:
-                    jr.unpersist(False)
+                    internals.unpersist_rdd(jr)
         else:
             # capture succeeded earlier this process but failed now —
             # anomalous (the API is version-level); nothing safe to

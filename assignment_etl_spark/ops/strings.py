@@ -1,4 +1,4 @@
-"""String normalization: column-name cleanup (P1), NFKC+lowercase (F3), trim.
+"""String normalization: column-name cleanup (P1), NFKC+lowercase (F3).
 
 F3 (reference clean_utf8, /root/reference/etl.py:190-198) re-encodes UTF-8
 with replacement, NFKC-normalizes, lowercases — applied to *every* string
@@ -9,8 +9,8 @@ order-of-operations (SURVEY §7.4.6).
 
 Scale note: lowercase is native; NFKC has no Catalyst builtin, so it rides an
 Arrow-vectorized pandas_udf — the one sanctioned Python crossing (SURVEY
-§2.10). ``nfkc=False`` keeps the whole pass in codegen when the data is known
-ASCII. Invalid-byte replacement is a no-op for data Spark already decoded.
+§2.10). Invalid-byte replacement is a no-op for data Spark already decoded.
+Whitespace trim (F14) happens at ingest, in the CSV readers.
 """
 
 from __future__ import annotations
@@ -19,7 +19,7 @@ import re
 import unicodedata
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
@@ -35,33 +35,17 @@ def normalize_column_names(df: DataFrame) -> DataFrame:
 
 
 @pandas_udf(T.StringType())
-def _nfkc_lower(s: pd.Series) -> pd.Series:
+def nfkc_lower(s: pd.Series) -> pd.Series:
     return s.str.normalize("NFKC").str.lower()
 
 
-def nfkc_lower(col: Column, *, nfkc: bool = True) -> Column:
-    return _nfkc_lower(col) if nfkc else F.lower(col)
-
-
-def normalize_strings(
-    df: DataFrame, columns: list[str] | None = None, *, nfkc: bool = True
-) -> DataFrame:
+def normalize_strings(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
     """F3 applied to all (or the given) string columns; non-strings untouched."""
     if columns is None:
         columns = [f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)]
     out = df
     for c in columns:
-        out = out.withColumn(c, nfkc_lower(F.col(c), nfkc=nfkc))
-    return out
-
-
-def trim_strings(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
-    """F14: whitespace strip over string columns (etl.py:84)."""
-    if columns is None:
-        columns = [f.name for f in df.schema.fields if isinstance(f.dataType, T.StringType)]
-    out = df
-    for c in columns:
-        out = out.withColumn(c, F.trim(F.col(c)))
+        out = out.withColumn(c, nfkc_lower(F.col(c)))
     return out
 
 

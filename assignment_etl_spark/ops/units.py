@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from assignment_etl_spark.caching import scoped_persist
 from assignment_etl_spark.ops.quality import log_frame
 
 LB_TO_KG = 0.453592
@@ -246,21 +247,17 @@ def normalize_weights(
     column: str = "weight",
     height_col: str = "height_cm",
     filename: str = "patients.csv",
-    persist: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Derive ``weight_kg`` + the flagged-row log stream (etl.py:287-308).
 
-    ``persist`` caches the struct stage — the shared base of BOTH outputs.
-    Without the cache barrier, the log branch's flagged-filter is pushed
-    down through every staged projection into the scan, re-inlining the
-    full F2 chain into one Filter expression (janino 64 KB overrun →
-    interpreted fallback) and re-scanning the source. Pipelines pass
-    persist=True; leave False for single-output composition."""
-    with_struct = with_weight_struct(df, column, height_col, out="_w")
-    if persist:
-        from assignment_etl_spark.caching import scoped_persist
-
-        with_struct = scoped_persist(with_struct)
+    The struct stage — the shared base of BOTH outputs — is cached in the
+    caller's ``caching`` scope. Without the cache barrier, the log
+    branch's flagged-filter is pushed down through every staged
+    projection into the scan, re-inlining the full F2 chain into one
+    Filter expression (janino 64 KB overrun → interpreted fallback) and
+    re-scanning the source. Single-output composition wants
+    ``with_weight_struct`` instead."""
+    with_struct = scoped_persist(with_weight_struct(df, column, height_col, out="_w"))
     clean = with_struct.withColumn("weight_kg", F.col("_w.weight_kg")).drop("_w")
     logs = log_frame(
         with_struct.filter(F.col("_w.flagged")),

@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from assignment_etl_spark.caching import scoped_persist
 from assignment_etl_spark.io.xml import read_diagnoses_xml
 from assignment_etl_spark.ops.codes import coerce_bool
 from assignment_etl_spark.ops.dates import parse_iso_with_midnight_fallback
@@ -29,7 +30,7 @@ from assignment_etl_spark.schemas import ROW_ID
 
 
 def clean_diagnoses(
-    raw: DataFrame, *, nfkc: bool = True, strict_parity: bool = False
+    raw: DataFrame, *, strict_parity: bool = False
 ) -> tuple[DataFrame, DataFrame]:
     df = raw.withColumn("is_primary", coerce_bool(F.col("is_primary_raw"))).drop(
         "is_primary_raw"
@@ -97,22 +98,15 @@ def clean_diagnoses(
         "recorded_at", parse_iso_with_midnight_fallback(F.col("recorded_at_raw"))
     ).drop("recorded_at_raw")
 
-    df = normalize_strings(df, nfkc=nfkc)
+    df = normalize_strings(df)
     logs = union_logs(drop_logs, fill_logs, dup_logs)
-    return df.drop(ROW_ID), normalize_strings(logs, nfkc=nfkc)
+    return df.drop(ROW_ID), normalize_strings(logs)
 
 
 def run(
-    spark: SparkSession,
-    path: str,
-    *,
-    nfkc: bool = True,
-    strict_parity: bool = False,
-    persist_intermediates: bool = False,
+    spark: SparkSession, path: str, *, strict_parity: bool = False
 ) -> tuple[DataFrame, DataFrame]:
-    raw = read_diagnoses_xml(spark, path)
-    if persist_intermediates:
-        # the XML shred (mapInPandas) is the expensive shared base of the
-        # clean output and every log stream (SURVEY §4.3.2)
-        raw = raw.persist()
-    return clean_diagnoses(raw, nfkc=nfkc, strict_parity=strict_parity)
+    # the XML shred (mapInPandas) is the expensive shared base of the
+    # clean output and every log stream (SURVEY §4.3.2)
+    raw = scoped_persist(read_diagnoses_xml(spark, path))
+    return clean_diagnoses(raw, strict_parity=strict_parity)

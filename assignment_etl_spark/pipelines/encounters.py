@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from assignment_etl_spark.caching import scoped_persist
 from assignment_etl_spark.io.messy_csv import read_messy_csv
 from assignment_etl_spark.ops.codes import validate_enum
 from assignment_etl_spark.ops.dates import duration_hours, parse_datetime_columns
@@ -32,20 +33,18 @@ def clean_encounters(
     raw: DataFrame,
     *,
     filename: str = "encounters.csv",
-    nfkc: bool = True,
-    persist_intermediates: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
-    """persist_intermediates caches the post-parse frame — the shared base
-    of the clean output and every log stream (SURVEY §4.3.2). Without it,
-    materializing clean + logs re-runs the messy-CSV split and the
-    13-format timestamp lattice once per consumer branch."""
-    df = normalize_strings(raw, nfkc=nfkc)
+    """The post-parse frame is cached in the caller's ``caching`` scope —
+    the shared base of the clean output and every log stream (SURVEY
+    §4.3.2). Without it, materializing clean + logs re-runs the
+    messy-CSV split and the 13-format timestamp lattice once per
+    consumer branch."""
+    df = normalize_strings(raw)
 
     df, dt_logs = parse_datetime_columns(
         df, ["admit_dt", "discharge_dt"], filename=filename
     )
-    if persist_intermediates:
-        df = df.persist()
+    df = scoped_persist(df)
 
     # Reference quirk (etl.py:543,556,569,582): row.get("source_file",
     # default) returns NaN — NOT the default — when the column exists with a
@@ -97,20 +96,12 @@ def clean_encounters(
         duration_hours(F.col("admit_dt"), F.col("discharge_dt")),
     )
     # final clean_utf8 pass (etl.py:684) — lowercases the UNKNOWN fill
-    df = normalize_strings(df, nfkc=nfkc)
+    df = normalize_strings(df)
 
     logs = union_logs(dt_logs, dup_logs, order_logs, missing_logs, type_logs)
-    return df.drop(ROW_ID), normalize_strings(logs, nfkc=nfkc)
+    return df.drop(ROW_ID), normalize_strings(logs)
 
 
-def run(
-    spark: SparkSession,
-    path: str,
-    *,
-    nfkc: bool = True,
-    persist_intermediates: bool = False,
-) -> tuple[DataFrame, DataFrame]:
+def run(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     raw = read_messy_csv(spark, path, ENCOUNTER_COLUMNS)
-    return clean_encounters(
-        raw, nfkc=nfkc, persist_intermediates=persist_intermediates
-    )
+    return clean_encounters(raw)

@@ -25,38 +25,24 @@ def clean_patients(
     raw: DataFrame,
     *,
     filename: str = "patients.csv",
-    nfkc: bool = True,
-    persist_intermediates: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """raw (string cols + _row_id) → (clean patients, log stream).
 
-    persist_intermediates caches the post-F2 struct stage inside
-    normalize_weights — the shared base of the clean output and every log
-    branch (SURVEY §4.3.2). The cache barrier also stops the flagged-filter
-    pushdown that would re-inline the full F2 chain into the scan (see
-    normalize_weights docstring)."""
+    normalize_weights caches the post-F2 struct stage — the shared base of
+    the clean output and every log branch (SURVEY §4.3.2) — in the
+    caller's ``caching`` scope."""
     df = normalize_heights(raw)
-    df, w_logs = normalize_weights(
-        df, filename=filename, persist=persist_intermediates
-    )
+    df, w_logs = normalize_weights(df, filename=filename)
     df, s_logs = map_sex(df, filename=filename)
     df, d_logs = parse_dob(df, filename=filename)
     df, dup_logs = patient_dedup(df, filename=filename)
     df = df.drop("weight", "height")
-    df = normalize_strings(df, nfkc=nfkc)
+    df = normalize_strings(df)
     clean = df.drop(ROW_ID)
     logs = union_logs(w_logs, s_logs, d_logs, dup_logs)
-    return clean, normalize_strings(logs, nfkc=nfkc)
+    return clean, normalize_strings(logs)
 
 
-def run(
-    spark: SparkSession,
-    path: str,
-    *,
-    nfkc: bool = True,
-    persist_intermediates: bool = False,
-) -> tuple[DataFrame, DataFrame]:
+def run(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     raw = read_csv(spark, path, schema=PATIENTS_RAW)
-    return clean_patients(
-        raw, nfkc=nfkc, persist_intermediates=persist_intermediates
-    )
+    return clean_patients(raw)

@@ -4,7 +4,9 @@ Postgres, etl.py:711-719).
 
 The shared intermediates behind each (clean, log) pair are persisted before
 the double consumption so the scans and cleaning expressions run once
-(SURVEY §4.3.2).
+(SURVEY §4.3.2). Every such cache, and the four returned tables, is owned
+by the caller's ``caching.scope()`` (or the root that
+``release_scoped_caches()`` drains): the caller's actions consume them.
 """
 
 from __future__ import annotations
@@ -14,6 +16,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.storagelevel import StorageLevel
 
+from assignment_etl_spark.caching import scoped_persist
 from assignment_etl_spark.ops.quality import union_logs
 from assignment_etl_spark.pipelines import diagnoses, encounters, patients
 
@@ -40,8 +43,6 @@ def run_etl(
     encounters_path: str,
     diagnoses_path: str,
     *,
-    nfkc: bool = True,
-    persist: bool = True,
     ri_audit: bool = False,
 ) -> EtlResult:
     """Full batch run. ``ri_audit=True`` adds the referential-integrity
@@ -49,15 +50,9 @@ def run_etl(
     not in patients) and orphan diagnoses (encounter_id not in encounters)
     are reported to the logs table — the data itself still flows through
     unchanged, matching reference behavior."""
-    p_clean, p_logs = patients.run(
-        spark, patients_path, nfkc=nfkc, persist_intermediates=persist
-    )
-    e_clean, e_logs = encounters.run(
-        spark, encounters_path, nfkc=nfkc, persist_intermediates=persist
-    )
-    d_clean, d_logs = diagnoses.run(
-        spark, diagnoses_path, nfkc=nfkc, persist_intermediates=persist
-    )
+    p_clean, p_logs = patients.run(spark, patients_path)
+    e_clean, e_logs = encounters.run(spark, encounters_path)
+    d_clean, d_logs = diagnoses.run(spark, diagnoses_path)
     log_parts = [p_logs, e_logs, d_logs]
     if ri_audit:
         from assignment_etl_spark.ops.quality import orphan_check
@@ -76,9 +71,8 @@ def run_etl(
         )
     logs = union_logs(*log_parts)
     result = EtlResult(p_clean, e_clean, d_clean, logs)
-    if persist:
-        for df in result.tables().values():
-            df.persist(StorageLevel.MEMORY_AND_DISK)
+    for df in result.tables().values():
+        scoped_persist(df, StorageLevel.MEMORY_AND_DISK)
     return result
 
 

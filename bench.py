@@ -18,7 +18,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry_mod
-from assignment_etl_spark.caching import release_scoped_caches
+from assignment_etl_spark.caching import release, release_scoped_caches
 from assignment_etl_spark.session import get_spark
 
 HEADLINE = [
@@ -416,7 +416,7 @@ def build_queries(spark) -> dict:
         # eager=True materialized delta/dropped above — the shared
         # signature cache has served every consumer; release it so the
         # bench session doesn't accumulate per-rep signature caches
-        all_sig.unpersist()
+        release(all_sig)
         delta_counts = delta.groupBy(F.col("keeper_id").alias("doc_id")).agg(
             F.count(F.lit(1)).alias("_n")
         )

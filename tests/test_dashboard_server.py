@@ -3,8 +3,11 @@ requests against a live server, asserting route-by-route parity with the
 pushdown queries the widgets wrap."""
 
 import csv
+import html
 import io
+import re
 import urllib.request
+from urllib.parse import quote
 
 import pytest
 from pyspark.sql import functions as F
@@ -107,6 +110,36 @@ def test_csv_download_matches_rows(server, etl):
     rows = list(csv.DictReader(io.StringIO(body)))
     assert len(rows) == etl.logs.filter(F.col("reason") == reason).count()
     assert all(r["reason"] == reason for r in rows)
+
+
+def test_quality_links_encode_reasons(server, etl):
+    """A reason with '+' and spaces must survive the link round trip: a
+    browser percent-encodes spaces but sends '+' as is, which a query
+    string decodes as a space."""
+    reason = "duplicate encounter_id + code"
+    n = etl.logs.filter(F.col("reason") == reason).count()
+    assert n >= 1
+    _, _, body = _get(server, "/quality")
+    links = [
+        quote(html.unescape(h), safe="/?&=+%")
+        for h in re.findall(r"href='([^']*)'", body)
+        if h.startswith(("/drilldown?", "/download?"))
+    ]
+    drill = [h for h in links if h.startswith("/drilldown?")]
+    download = [h for h in links if h.startswith("/download?")]
+    assert len(drill) == len(download) == etl.logs.select("reason").distinct().count()
+    got = {}
+    for href in drill:
+        status, _, page = _get(server, href)
+        assert status == 200
+        got[html.unescape(re.search(r"<title>Issue type: (.*?)</title>", page)[1])] = (
+            page.count("<tr>") - 1
+        )
+    assert got[reason] == n
+    (dl,) = [h for h in download if "%2B" in h]
+    status, _, csv_body = _get(server, dl)
+    assert status == 200
+    assert len(list(csv.DictReader(io.StringIO(csv_body)))) == n
 
 
 def test_unknown_table_is_400(server):

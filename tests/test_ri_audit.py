@@ -31,7 +31,6 @@ def test_runner_ri_audit(spark, fixture_dir):
         str(fixture_dir / "encounters.csv"),
         str(fixture_dir / "diagnoses.xml"),
         ri_audit=True,
-        persist=False,
     )
     orphans = etl.logs.filter(F.col("reason").startswith("orphan_"))
     by_reason = {r.reason: r.n for r in orphans.groupBy("reason").agg(F.count(F.lit(1)).alias("n")).collect()}

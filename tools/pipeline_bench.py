@@ -55,7 +55,7 @@ def main() -> None:
     spark = get_spark("pipeline-bench")
     spark.sparkContext.setLogLevel("ERROR")
     t0 = time.perf_counter()
-    clean, logs = encounters.run(spark, path, persist_intermediates=True)
+    clean, logs = encounters.run(spark, path)
     n_clean = clean.count()
     n_logs = logs.count()
     dt = time.perf_counter() - t0
