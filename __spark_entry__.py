@@ -5070,7 +5070,7 @@ def q_incremental_minhash_documents(spark: SparkSession, sf_dir: str) -> DataFra
     # oracle hash are unchanged.
     all_sig = _sig_frame(
         docs, text_col="text", id_col="doc_id", num_hashes=32,
-        shingle_n=5, use_numpy=True, portable=True, seed=7,
+        shingle_n=5, portable=True, seed=7,
     )
     hist_sig = all_sig.filter(F.col("_id") % 2 == 0)
     batch_sig = all_sig.filter(F.col("_id") % 2 == 1)
@@ -5257,7 +5257,7 @@ def q_band_store_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     # guide §4); deterministic signatures ⇒ identical index content
     all_sig = _sig_frame(
         docs, text_col="text", id_col="doc_id", num_hashes=32,
-        shingle_n=5, use_numpy=True, portable=True, seed=7,
+        shingle_n=5, portable=True, seed=7,
     )
     hist_sig = all_sig.filter(F.col("_id") % 2 == 0)
     batch_sig = all_sig.filter(F.col("_id") % 2 == 1)

@@ -14,7 +14,6 @@ candidate pairs emitted by banding.
 from __future__ import annotations
 
 import functools
-import math
 
 import numpy as np
 import pandas as pd
@@ -153,11 +152,11 @@ def make_minhash_signature_udf(
     over byte n-grams (sliding_window_view · powers, uint64 wraparound —
     deterministic everywhere), then min over (a·h + b) per permutation.
 
-    This is the hot path for corpus-scale dedup: the JVM expression variant
-    (minhash_signature) re-evaluates a ~num_hashes×shingles expression tree
-    per row in interpreted mode (the tree exceeds codegen limits); the numpy
-    path is one BLAS-shaped pass per Arrow batch, ~100× faster, and the
-    signature column it produces feeds the same JVM-side banding join.
+    The production signer (``_sig_frame(portable=False)``): one
+    BLAS-shaped pass per Arrow batch, where a Column-expression signer
+    re-evaluates a ~num_hashes×shingles tree per row in interpreted mode
+    (the tree exceeds codegen limits). The signature column it produces
+    feeds the same JVM-side banding join as the portable gate signer.
     """
     rng = np.random.RandomState(seed)
     a = (rng.randint(1, 1 << 61, size=num_hashes).astype(np.uint64) | np.uint64(1))
@@ -188,22 +187,6 @@ def make_minhash_signature_udf(
         return pd.Series(out)
 
     return minhash_sig
-
-
-def minhash_signature(shingle_col: Column, num_hashes: int = 32, seed: int = 7) -> Column:
-    """num_hashes minhash values: min over shingles of (a*x + b) mod p.
-    JVM-expression variant — prefer make_minhash_signature_udf for large
-    corpora (see its docstring)."""
-    sigs = []
-    rnd = _perm_params(num_hashes, seed)
-    for a, b in rnd:
-        hashed = F.transform(
-            shingle_col,
-            lambda x: (F.lit(a) * (x.bitwiseAND(F.lit((1 << 31) - 1))) + F.lit(b))
-            % F.lit(MERSENNE),
-        )
-        sigs.append(F.array_min(hashed))
-    return F.array(*sigs)
 
 
 def _perm_params(num_hashes: int, seed: int) -> list[tuple[int, int]]:
@@ -238,10 +221,13 @@ def portable_codepoints(col: Column, n: int = 5) -> Column:
 
 
 def portable_gram_hashes_from_cp(cp: Column, n: int = 5) -> Column:
-    """Distinct n-gram polynomial hashes from a MATERIALIZED codepoint
-    array column (O(1) element_at per char). The cp argument must be a
-    stored column (persist barrier), not an expression — element_at
-    re-evaluates its child per access."""
+    """Distinct character n-gram hashes via a 31-ary polynomial over
+    codepoints mod PORTABLE_P — the cross-engine-exact sibling of
+    ``shingles`` (which uses JVM-only xxhash64) — from a MATERIALIZED
+    codepoint array column (O(1) element_at per char). The cp argument
+    must be a stored column (persist barrier), not an expression —
+    element_at re-evaluates its child per access; ``_sig_frame(portable=
+    True)`` stages portable_codepoints → persist → this."""
     idx = F.sequence(F.lit(1), F.size(cp) - (n - 1))
 
     def gram(i: Column) -> Column:
@@ -251,41 +237,6 @@ def portable_gram_hashes_from_cp(cp: Column, n: int = 5) -> Column:
         return acc
 
     return F.array_distinct(F.transform(idx, gram))
-
-
-def portable_gram_hashes(col: Column, n: int = 5) -> Column:
-    """Distinct character n-gram hashes via a 31-ary polynomial over
-    codepoints mod PORTABLE_P — the cross-engine-exact sibling of
-    ``shingles`` (which uses JVM-only xxhash64). Compose-anywhere Column
-    variant; the staged two-step (portable_codepoints → persist →
-    portable_gram_hashes_from_cp) is what minhash_lsh_pairs(portable=True)
-    runs — see portable_codepoints for why."""
-    s = F.lower(F.regexp_replace(col, r"\s+", " "))
-    s = F.when(F.length(s) < n, F.rpad(s, n, " ")).otherwise(s)
-    idx = F.sequence(F.lit(1), F.length(s) - (n - 1))
-
-    def gram(i: Column) -> Column:
-        acc = F.lit(0).cast("long")
-        for j in range(n):
-            acc = (acc * 31 + F.ascii(F.substring(s, i + F.lit(j), F.lit(1)))) % PORTABLE_P
-        return acc
-
-    return F.array_distinct(F.transform(idx, gram))
-
-
-def portable_minhash_signature(
-    col: Column, num_hashes: int = 32, shingle_n: int = 5, seed: int = 7
-) -> Column:
-    """Minhash signature over portable gram hashes: min of (a·h + b) mod
-    PORTABLE_P per permutation. Bit-identical in any int64 SQL engine."""
-    grams = portable_gram_hashes(col, shingle_n)
-    # F.transform is invoked eagerly per iteration, so the closure over
-    # (a, b) is bound before the next loop step.
-    sigs = [
-        F.array_min(F.transform(grams, lambda h: (F.lit(a) * h + F.lit(b)) % PORTABLE_P))
-        for a, b in portable_perm_params(num_hashes, seed)
-    ]
-    return F.array(*sigs)
 
 
 def portable_band_hash(sig_col: Column, start: int, rows: int) -> Column:
@@ -304,14 +255,16 @@ def _sig_frame(
     id_col: str,
     num_hashes: int,
     shingle_n: int,
-    use_numpy: bool,
     portable: bool,
     seed: int,
     fan_out: bool = True,
 ) -> DataFrame:
     """Persisted ("_id", "_sig") minhash signatures — the shared first
     stage of minhash_lsh_pairs / build_band_store /
-    incremental_minhash_dedup. Persisting matters: Catalyst's
+    incremental_minhash_dedup, and the one place a signer is picked:
+    ``portable=True`` runs the PORTABLE_P expression kernel the DuckDB
+    gates replay, ``portable=False`` the numpy production kernel
+    (:func:`make_minhash_signature_udf`). Persisting matters: Catalyst's
     CollapseProject would otherwise inline the (shingle → num_hashes ×
     min-hash) expression into every band hash AND both sides of any
     downstream self-join — an O(bands × 2) recompute of the most
@@ -361,19 +314,34 @@ def _sig_frame(
         release(cps)
         release(grams)
         return sig  # already persisted + materialized above
-    elif use_numpy:
-        sig_udf = make_minhash_signature_udf(num_hashes, shingle_n, seed)
-        sig = df.select(
-            F.col(id_col).alias("_id"), sig_udf(F.col(text_col)).alias("_sig")
+    sig_udf = make_minhash_signature_udf(num_hashes, shingle_n, seed)
+    return scoped_persist(
+        df.select(F.col(id_col).alias("_id"), sig_udf(F.col(text_col)).alias("_sig"))
+    )
+
+
+def _checked_sig(sig: DataFrame, num_hashes: int) -> DataFrame:
+    """A caller-passed ("_id", "_sig") frame with every signature's length
+    checked against ``num_hashes`` as it is consumed: a frame signed with
+    another num_hashes would otherwise slice into wrong band hashes and a
+    wrong est cut without any error. NULL signatures (NULL text) pass.
+    A projection — no extra job."""
+    n = F.size(F.col("_sig"))
+    return sig.select(
+        "_id",
+        F.when(
+            F.col("_sig").isNotNull() & (n != num_hashes),
+            F.raise_error(
+                F.concat(
+                    F.lit("signature frame has "),
+                    n.cast("string"),
+                    F.lit(f" hashes per row, expected num_hashes={num_hashes}"),
+                )
+            ),
         )
-    else:
-        sig = df.select(
-            F.col(id_col).alias("_id"),
-            minhash_signature(
-                shingles(F.col(text_col), shingle_n), num_hashes, seed
-            ).alias("_sig"),
-        )
-    return scoped_persist(sig)
+        .otherwise(F.col("_sig"))
+        .alias("_sig"),
+    )
 
 
 def _with_bands(
@@ -402,6 +370,55 @@ def _with_bands(
     ).select("_id", "_sig", F.col("_b.band").alias("_band"), F.col("_b.bhash").alias("_bhash"))
 
 
+def _agreement(sig_a: Column, sig_b: Column, num_hashes: int) -> Column:
+    """Estimated Jaccard of two signatures: the share of the num_hashes
+    positions where they agree. A NULL signature (NULL text) fails every
+    est cut."""
+    return F.size(
+        F.filter(F.zip_with(sig_a, sig_b, lambda x, y: x == y), lambda v: v)
+    ) / F.lit(float(num_hashes))
+
+
+def _band_pairs(
+    banded: DataFrame, *, num_hashes: int, jaccard_threshold: float
+) -> DataFrame:
+    """The LSH pair step over a :func:`_with_bands` frame: self-equi-join
+    on (band, bhash) → one row per colliding pair → est-Jaccard cut.
+    Returns (id_a, id_b, est_jaccard) with id_a < id_b.
+
+    Deliberately dedup-then-est (r13 tried-and-reverted the map-side est
+    cut, guide §2.3's shuffle-fewer-bytes instinct): on template-heavy
+    corpora the band self-join emits ~9.5x duplicate collisions per pair
+    (sf10: 2.73M collision rows -> 287k pairs), so computing est per
+    collision row before the dedup cost MORE than shuffling the two
+    32-hash signature arrays per row saved (measured 4.5s -> 6.8s for
+    incremental_minhash_dedup stage 1 at sf10; same pair set either
+    way)."""
+    a, b = banded.alias("a"), banded.alias("b")
+    pairs = (
+        a.join(
+            b,
+            (F.col("a._band") == F.col("b._band"))
+            & (F.col("a._bhash") == F.col("b._bhash"))
+            & (F.col("a._id") < F.col("b._id")),
+        )
+        .select(
+            F.col("a._id").alias("id_a"),
+            F.col("b._id").alias("id_b"),
+            F.col("a._sig").alias("_sa"),
+            F.col("b._sig").alias("_sb"),
+        )
+        .dropDuplicates(["id_a", "id_b"])
+    )
+    return (
+        pairs.withColumn(
+            "est_jaccard", _agreement(F.col("_sa"), F.col("_sb"), num_hashes)
+        )
+        .filter(F.col("est_jaccard") >= jaccard_threshold)
+        .select("id_a", "id_b", "est_jaccard")
+    )
+
+
 def minhash_lsh_pairs(
     df: DataFrame,
     *,
@@ -411,7 +428,6 @@ def minhash_lsh_pairs(
     bands: int = 8,
     shingle_n: int = 5,
     jaccard_threshold: float = 0.5,
-    use_numpy: bool = True,
     portable: bool = False,
     seed: int = 7,
 ) -> DataFrame:
@@ -433,48 +449,11 @@ def minhash_lsh_pairs(
         id_col=id_col,
         num_hashes=num_hashes,
         shingle_n=shingle_n,
-        use_numpy=use_numpy,
         portable=portable,
         seed=seed,
     )
     banded = _with_bands(sig, num_hashes=num_hashes, bands=bands, portable=portable)
-
-    # Deliberately dedup-then-est (r13 tried-and-reverted the map-side
-    # est cut): the band self-join emits many duplicate collisions per
-    # pair on template-heavy corpora (~9.5x at sf10), so per-collision
-    # est evaluation cost more than shuffling the signature payload
-    # through the dedup saved — see incremental_minhash_dedup stage 1.
-    a = banded.alias("a")
-    b = banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a._band") == F.col("b._band"))
-            & (F.col("a._bhash") == F.col("b._bhash"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            F.col("a._sig").alias("_sa"),
-            F.col("b._sig").alias("_sb"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with(F.col("_sa"), F.col("_sb"), lambda x, y: x == y),
-                lambda v: v,
-            )
-        )
-        / F.lit(float(num_hashes))
-    )
-    return (
-        pairs.withColumn("est_jaccard", est)
-        .filter(F.col("est_jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "est_jaccard")
-    )
+    return _band_pairs(banded, num_hashes=num_hashes, jaccard_threshold=jaccard_threshold)
 
 
 def cluster_pairs(
@@ -638,7 +617,6 @@ def build_band_store(
     num_hashes: int = 32,
     bands: int = 8,
     shingle_n: int = 5,
-    use_numpy: bool = True,
     portable: bool = False,
     seed: int = 7,
     signatures: DataFrame | None = None,
@@ -664,9 +642,10 @@ def build_band_store(
     Arrow-UDF scan of every history text — is skipped entirely; the
     caller owns that frame's cache lifecycle. Signatures are a pure
     deterministic function of the text, so the resulting index is
-    byte-identical either way."""
+    byte-identical either way. A ``signatures`` row whose length is not
+    ``num_hashes`` fails the job that consumes the index."""
     sig = (
-        signatures
+        _checked_sig(signatures, num_hashes)
         if signatures is not None
         else _sig_frame(
             corpus,
@@ -674,7 +653,6 @@ def build_band_store(
             id_col=id_col,
             num_hashes=num_hashes,
             shingle_n=shingle_n,
-            use_numpy=use_numpy,
             portable=portable,
             seed=seed,
         )
@@ -785,7 +763,6 @@ def incremental_minhash_dedup(
     shingle_n: int = 5,
     jaccard_threshold: float = 0.5,
     verify: bool = True,
-    use_numpy: bool = True,
     portable: bool = False,
     seed: int = 7,
     eager: bool = True,
@@ -864,10 +841,11 @@ def incremental_minhash_dedup(
     a projection, no recompute) instead of rebuilding them from keeper
     text. Signatures are a pure deterministic function of the text, so
     drop decisions are identical either way. Caller-passed frames are
-    caller-owned: ``eager`` does not unpersist them.
+    caller-owned: ``eager`` does not unpersist them, and a signature whose
+    length is not ``num_hashes`` fails the job that consumes it.
     """
     sig = (
-        batch_signatures
+        _checked_sig(batch_signatures, num_hashes)
         if batch_signatures is not None
         else _sig_frame(
             batch,
@@ -875,51 +853,16 @@ def incremental_minhash_dedup(
             id_col=id_col,
             num_hashes=num_hashes,
             shingle_n=shingle_n,
-            use_numpy=use_numpy,
             portable=portable,
             seed=seed,
         )
     )
     banded = _with_bands(sig, num_hashes=num_hashes, bands=bands, portable=portable)
 
-    # stage 1: within-batch (minhash_dedup contract). Deliberately
-    # dedup-then-est (r13 tried-and-reverted the map-side est cut,
-    # guide §2.3's shuffle-fewer-bytes instinct): on template-heavy
-    # corpora the band self-join emits ~9.5x duplicate collisions per
-    # pair (sf10: 2.73M collision rows -> 287k pairs), so computing est
-    # per collision row before the dedup cost MORE than shuffling the
-    # two 32-hash signature arrays per row saved (measured 4.5s -> 6.8s
-    # for this stage at sf10; same pair set either way).
-    a, b = banded.alias("a"), banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a._band") == F.col("b._band"))
-            & (F.col("a._bhash") == F.col("b._bhash"))
-            & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            F.col("a._sig").alias("_sa"),
-            F.col("b._sig").alias("_sb"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    est = (
-        F.size(
-            F.filter(
-                F.zip_with(F.col("_sa"), F.col("_sb"), lambda x, y: x == y),
-                lambda v: v,
-            )
-        )
-        / F.lit(float(num_hashes))
-    )
-    pairs = (
-        pairs.withColumn("est_jaccard", est)
-        .filter(F.col("est_jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b")
-    )
+    # stage 1: within-batch (minhash_dedup contract)
+    pairs = _band_pairs(
+        banded, num_hashes=num_hashes, jaccard_threshold=jaccard_threshold
+    ).select("id_a", "id_b")
     if verify:
         pairs = verify_pairs_exact(
             pairs,
@@ -990,10 +933,13 @@ def incremental_minhash_dedup(
                 # the store build already signed every history text —
                 # fetch the verified keepers' signatures by id instead
                 # of re-running the minhash pass over their texts
-                keeper_sig = history_signatures.join(
-                    ver.select(F.col("keeper_id").alias("_kid")).distinct(),
-                    on=F.col("_id") == F.col("_kid"),
-                    how="left_semi",
+                keeper_sig = _checked_sig(
+                    history_signatures.join(
+                        ver.select(F.col("keeper_id").alias("_kid")).distinct(),
+                        on=F.col("_id") == F.col("_kid"),
+                        how="left_semi",
+                    ),
+                    num_hashes,
                 ).select(
                     F.col("_id").alias("keeper_id"), F.col("_sig").alias("_ksig")
                 )
@@ -1008,7 +954,6 @@ def incremental_minhash_dedup(
                     id_col=id_col,
                     num_hashes=num_hashes,
                     shingle_n=shingle_n,
-                    use_numpy=use_numpy,
                     portable=portable,
                     seed=seed,
                     fan_out=False,  # semi-join output is already parallel
@@ -1016,17 +961,7 @@ def incremental_minhash_dedup(
                 keeper_sig = keeper_sig_frame.select(
                     F.col("_id").alias("keeper_id"), F.col("_sig").alias("_ksig")
                 )
-            est2 = (
-                F.size(
-                    F.filter(
-                        F.zip_with(
-                            F.col("_bsig"), F.col("_ksig"), lambda x, y: x == y
-                        ),
-                        lambda v: v,
-                    )
-                )
-                / F.lit(float(num_hashes))
-            )
+            est2 = _agreement(F.col("_bsig"), F.col("_ksig"), num_hashes)
             cand = (
                 ver.join(sig.select("_id", F.col("_sig").alias("_bsig")), "_id")
                 .join(keeper_sig, "keeper_id")
@@ -1122,6 +1057,38 @@ def _collapse_exact(
     return reps, member_edges
 
 
+def _rep_pairs(
+    df: DataFrame,
+    *,
+    text_col: str,
+    id_col: str,
+    verify: bool,
+    collapse_exact: bool,
+    **lsh_kwargs,
+) -> tuple[DataFrame, DataFrame | None]:
+    """(pairs, member_edges): the shared front half of the full-corpus
+    dedups — collapse normalized-identical docs to representatives
+    (``collapse_exact``, :func:`_collapse_exact`; member_edges is None
+    without it), LSH candidate pairs among the representatives, and
+    (``verify``) the exact n-gram Jaccard re-check of every pair."""
+    reps, member_edges = (
+        _collapse_exact(df, text_col=text_col, id_col=id_col)
+        if collapse_exact
+        else (df, None)
+    )
+    pairs = minhash_lsh_pairs(reps, text_col=text_col, id_col=id_col, **lsh_kwargs)
+    if verify:
+        pairs = verify_pairs_exact(
+            pairs,
+            reps,
+            text_col=text_col,
+            id_col=id_col,
+            shingle_n=lsh_kwargs.get("shingle_n", 5),
+            threshold=lsh_kwargs.get("jaccard_threshold", 0.5),
+        )
+    return pairs, member_edges
+
+
 def minhash_dedup_cc(
     df: DataFrame,
     *,
@@ -1145,21 +1112,14 @@ def minhash_dedup_cc(
     component membership is provably unchanged (CC runs to convergence
     here), and the |group|² clique edges that make template-heavy
     corpora quadratic never materialize."""
-    reps, member_edges = (
-        _collapse_exact(df, text_col=text_col, id_col=id_col)
-        if collapse_exact
-        else (df, None)
+    pairs, member_edges = _rep_pairs(
+        df,
+        text_col=text_col,
+        id_col=id_col,
+        verify=verify,
+        collapse_exact=collapse_exact,
+        **lsh_kwargs,
     )
-    pairs = minhash_lsh_pairs(reps, text_col=text_col, id_col=id_col, **lsh_kwargs)
-    if verify:
-        pairs = verify_pairs_exact(
-            pairs,
-            reps,
-            text_col=text_col,
-            id_col=id_col,
-            shingle_n=lsh_kwargs.get("shingle_n", 5),
-            threshold=lsh_kwargs.get("jaccard_threshold", 0.5),
-        )
     edges = pairs.select("id_a", "id_b")
     if member_edges is not None:
         edges = edges.unionByName(member_edges)
@@ -1192,21 +1152,14 @@ def minhash_dedup(
     drop set of the uncollapsed run, because every member shares its
     rep's edge set and the minimal partner of any doc is reachable
     through reps."""
-    reps, member_edges = (
-        _collapse_exact(df, text_col=text_col, id_col=id_col)
-        if collapse_exact
-        else (df, None)
+    pairs, member_edges = _rep_pairs(
+        df,
+        text_col=text_col,
+        id_col=id_col,
+        verify=verify,
+        collapse_exact=collapse_exact,
+        **lsh_kwargs,
     )
-    pairs = minhash_lsh_pairs(reps, text_col=text_col, id_col=id_col, **lsh_kwargs)
-    if verify:
-        pairs = verify_pairs_exact(
-            pairs,
-            reps,
-            text_col=text_col,
-            id_col=id_col,
-            shingle_n=lsh_kwargs.get("shingle_n", 5),
-            threshold=lsh_kwargs.get("jaccard_threshold", 0.5),
-        )
     to_drop = pairs.select(F.col("id_b").alias(id_col))
     if member_edges is not None:
         to_drop = to_drop.unionByName(
@@ -1228,9 +1181,9 @@ def ngram_jaccard(
 
 def make_simhash_udf(bits: int = 64, seed: int = 11):
     """Arrow-batched numpy SimHash: FNV-1a token hashes vote per bit,
-    sign of the vote sum becomes the bit. The fast path for corpus-scale
-    fingerprinting (the Column-expression variant below builds a
-    bits×aggregate tree that runs interpreted).
+    sign of the vote sum becomes the bit. The production kernel for
+    corpus-scale fingerprinting; :func:`simhash_portable` is the gate
+    kernel the DuckDB oracle replays.
 
     Fully vectorized: ALL tokens of an Arrow batch are hashed in one padded
     byte-matrix FNV sweep (one numpy op per byte POSITION, not per token),
@@ -1290,25 +1243,6 @@ def make_simhash_udf(bits: int = 64, seed: int = 11):
         return pd.Series(out)
 
     return simhash_sig
-
-
-def simhash(col: Column, bits: int = 64) -> Column:
-    """SimHash over word tokens: sign of per-bit weighted sums of token
-    hashes. Near-dups differ in few bits (compare via hamming distance)."""
-    tokens = F.split(F.lower(F.regexp_replace(col, r"\s+", " ")), " ")
-    hashes = F.transform(tokens, lambda t: F.xxhash64(t))
-    bit_cols = []
-    for i in range(bits):
-        contrib = F.transform(
-            hashes,
-            lambda h: F.when(h.bitwiseAND(F.lit(1 << i if i < 63 else -(1 << 63))) != 0, 1).otherwise(-1),
-        )
-        total = F.aggregate(contrib, F.lit(0), lambda acc, v: acc + v)
-        bit_cols.append(F.when(total > 0, F.lit(1)).otherwise(F.lit(0)))
-    out = F.lit(0).cast("long")
-    for i, bit in enumerate(bit_cols[:63]):  # keep sign bit clear
-        out = out + (bit.cast("long") * F.lit(1 << i))
-    return out
 
 
 def hamming64(a: Column, b: Column) -> Column:
@@ -1586,15 +1520,12 @@ def minhash_dedup_keep_best(
     """
     from assignment_etl_spark.ext.graph import min_label_rounds
 
-    reps, member_edges = (
-        _collapse_exact(docs, text_col=text_col, id_col=id_col)
-        if collapse_exact
-        else (docs, None)
-    )
-    pairs = minhash_lsh_pairs(
-        reps,
+    pairs, member_edges = _rep_pairs(
+        docs,
         text_col=text_col,
         id_col=id_col,
+        verify=False,
+        collapse_exact=collapse_exact,
         jaccard_threshold=jaccard_threshold,
         portable=portable,
         **lsh_kwargs,

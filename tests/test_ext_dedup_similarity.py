@@ -6,10 +6,11 @@ from pyspark.sql import functions as F
 from assignment_etl_spark.ext.dedup import (
     exact_dedup,
     hamming64,
+    make_simhash_udf,
     minhash_dedup,
     minhash_lsh_pairs,
     ngram_jaccard,
-    simhash,
+    simhash_portable,
 )
 from assignment_etl_spark.ext.similarity import (
     brute_force_topk,
@@ -72,11 +73,18 @@ def test_ngram_jaccard(spark):
 
 
 def test_simhash_hamming(spark):
-    df = spark.createDataFrame([(0, BASE), (1, NEAR), (2, OTHER)], "i int, text string")
-    sh = {r.i: r.h for r in df.select("i", simhash(F.col("text"), bits=16).alias("h")).collect()}
-    d_near = spark.range(1).select(hamming64(F.lit(sh[0]), F.lit(sh[1])).alias("d")).first().d
-    d_far = spark.range(1).select(hamming64(F.lit(sh[0]), F.lit(sh[2])).alias("d")).first().d
-    assert d_near <= d_far
+    """Both SimHash kernels — the numpy FNV production UDF and the
+    portable gate kernel: a near-dup sits no farther than an unrelated
+    text, and NULL / empty text (no tokens) sign to 0."""
+    df = spark.createDataFrame(
+        [(0, BASE), (1, NEAR), (2, OTHER), (3, None), (4, "")], "i int, text string"
+    )
+    for kernel in (make_simhash_udf(bits=16), lambda c: simhash_portable(c, bits=16)):
+        sh = {r.i: r.h for r in df.select("i", kernel(F.col("text")).alias("h")).collect()}
+        assert sh[3] == 0 and sh[4] == 0
+        d_near = spark.range(1).select(hamming64(F.lit(sh[0]), F.lit(sh[1])).alias("d")).first().d
+        d_far = spark.range(1).select(hamming64(F.lit(sh[0]), F.lit(sh[2])).alias("d")).first().d
+        assert d_near <= d_far
 
 
 @pytest.fixture(scope="module")

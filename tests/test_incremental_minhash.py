@@ -224,11 +224,38 @@ def test_consistent_with_full_corpus_dedup(spark, sf_dir):
     surv, _delta, _dropped = incremental_minhash_dedup(
         batch, store, history_texts=hist, jaccard_threshold=0.4, portable=True
     )
-    full = minhash_dedup(
-        docs, jaccard_threshold=0.4, portable=True, use_numpy=False
-    )
+    full = minhash_dedup(docs, jaccard_threshold=0.4, portable=True)
     expected = {r.doc_id for r in full.collect() if r.doc_id >= 250}
     assert {r.doc_id for r in surv.collect()} == expected
+
+
+def test_band_store_rejects_mismatched_signatures(spark, corpus):
+    """A caller-passed signature frame signed with another num_hashes
+    fails loudly instead of slicing into wrong band hashes; NULL
+    signatures (NULL text) pass the shape check."""
+    hist, _batch = corpus
+    short = spark.createDataFrame(
+        [(0, list(range(16))), (2, None)], "_id long, _sig array<bigint>"
+    )
+    with pytest.raises(Exception, match="16 hashes per row, expected num_hashes=32"):
+        build_band_store(hist, num_hashes=32, signatures=short).collect()
+    ok = spark.createDataFrame(
+        [(0, list(range(32))), (2, None)], "_id long, _sig array<bigint>"
+    )
+    assert build_band_store(hist, num_hashes=32, signatures=ok).count() == 16
+
+
+def test_incremental_rejects_mismatched_signatures(spark, corpus):
+    hist, batch = corpus
+    store = build_band_store(hist, portable=True)
+    short = spark.createDataFrame(
+        [(11, list(range(16)))], "_id long, _sig array<bigint>"
+    )
+    with pytest.raises(Exception, match="16 hashes per row, expected num_hashes=32"):
+        incremental_minhash_dedup(
+            batch, store, history_texts=hist, jaccard_threshold=0.4,
+            portable=True, batch_signatures=short,
+        )
 
 
 def test_compaction_sizing_tracks_erasure(spark, tmp_path):

@@ -102,9 +102,10 @@ def test_portable_minhash_matches_python_model(spark, values):
     """The portable minhash signature (Spark expressions) must equal an
     independent pure-Python model of the same math on arbitrary text —
     the cross-engine-exactness claim the DuckDB oracle relies on."""
+    from assignment_etl_spark.caching import scope
     from assignment_etl_spark.ext.dedup import (
         PORTABLE_P,
-        portable_minhash_signature,
+        _sig_frame,
         portable_perm_params,
     )
 
@@ -130,12 +131,14 @@ def test_portable_minhash_matches_python_model(spark, values):
         return [min((a * g + b) % PORTABLE_P for g in grams) for a, b in params]
 
     df = spark.createDataFrame([(i, v) for i, v in enumerate(values)], "i long, t string")
-    got = {
-        r.i: list(r.sig)
-        for r in df.select(
-            "i", portable_minhash_signature(F.col("t"), num_hashes, n, seed).alias("sig")
-        ).collect()
-    }
+    with scope():
+        got = {
+            r._id: list(r._sig)
+            for r in _sig_frame(
+                df, text_col="t", id_col="i", num_hashes=num_hashes,
+                shingle_n=n, portable=True, seed=seed,
+            ).collect()
+        }
     for i, v in enumerate(values):
         assert got[i] == model(v), f"mismatch for {v!r}"
 

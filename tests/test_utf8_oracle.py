@@ -50,26 +50,26 @@ def test_exact_dedup_matches_python(spark, docs, docs_df):
 
 
 def test_portable_minhash_and_bands_match_python(spark, docs, docs_df):
-    from assignment_etl_spark.ext.dedup import (
-        portable_band_hash,
-        portable_minhash_signature,
-    )
+    from assignment_etl_spark.caching import scope
+    from assignment_etl_spark.ext.dedup import _sig_frame, portable_band_hash
 
     sig = F.col("sig")
-    rows = (
-        docs_df.select(
-            "doc_id",
-            portable_minhash_signature(F.col("text"), 32, 5, 7).alias("sig"),
+    with scope():
+        rows = (
+            _sig_frame(
+                docs_df, text_col="text", id_col="doc_id", num_hashes=32,
+                shingle_n=5, portable=True, seed=7,
+            )
+            .select(F.col("_id").alias("doc_id"), F.col("_sig").alias("sig"))
+            .select(
+                "doc_id",
+                "sig",
+                F.array(
+                    *[portable_band_hash(sig, b * 4 + 1, 4) for b in range(8)]
+                ).alias("bands"),
+            )
+            .collect()
         )
-        .select(
-            "doc_id",
-            "sig",
-            F.array(
-                *[portable_band_hash(sig, b * 4 + 1, 4) for b in range(8)]
-            ).alias("bands"),
-        )
-        .collect()
-    )
     for r in rows:
         want_sig = O.minhash_sig(dict(docs)[r.doc_id])
         assert list(r.sig) == want_sig, f"sig mismatch doc {r.doc_id}"

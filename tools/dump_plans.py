@@ -1,18 +1,46 @@
-"""Regenerate docs/PLANS.md: `explain("formatted")` snapshots for the
-plan-shape-critical queries, with the properties each plan must exhibit.
-Run: python tools/dump_plans.py
+"""Dump `explain("formatted")` physical plans.
+
+With no query names, regenerate docs/PLANS.md: snapshots of the
+plan-shape-critical `__spark_entry__` queries at sf0.01, with the
+property each plan must exhibit.
+
+With query names, write `<out>/<query>_<tag>.txt` for each named
+`bench.build_queries` query — before/after plan evidence for a change.
+Expression ids (`#123`), exchange plan ids and temp-directory names
+differ from run to run; they are masked, so two dumps diff cleanly.
+
+Usage: python tools/dump_plans.py
+       python tools/dump_plans.py --out DIR --tag TAG QUERY [QUERY ...]
+
+Tables are read from $SPARK_GRAFT_SF_DIR, else from the sf0.01 tables of
+TESTDATA.md (`testdata/sf0.01` beside the checkout).
 """
 
 from __future__ import annotations
 
+import argparse
 import io
+import os
+import re
 import sys
+import tempfile
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
-import __spark_entry__ as entry
-from assignment_etl_spark.session import get_spark
+import __spark_entry__ as entry  # noqa: E402
+from assignment_etl_spark.caching import release_scoped_caches  # noqa: E402
+from assignment_etl_spark.session import get_spark  # noqa: E402
+
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR") or os.path.join(
+    os.path.dirname(ROOT), "testdata", "sf0.01"
+)
+RUN_IDS = [
+    (re.compile(r"#\d+"), "#_"),
+    (re.compile(r"plan_id=\d+"), "plan_id=_"),
+    (re.compile(re.escape(tempfile.gettempdir()) + r"/[^/\s\]]+"), "<tmp>"),
+]
 
 SHOWCASE = {
     "pricing_summary": (
@@ -68,9 +96,14 @@ SHOWCASE = {
 }
 
 
-def main() -> None:
-    spark = get_spark("plans", shuffle_partitions=8)
-    spark.sparkContext.setLogLevel("ERROR")
+def explain(df) -> str:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue()
+
+
+def write_showcase(spark, sf_dir: str) -> None:
     qs = entry.queries()
     out = [
         "# PLANS — executed-plan snapshots (generated by tools/dump_plans.py)",
@@ -81,23 +114,54 @@ def main() -> None:
         "",
     ]
     for name, expectation in SHOWCASE.items():
-        df = qs[name](spark, "/root/testdata/sf0.01")
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
         out += [
             f"## {name}",
             "",
             f"**Required shape:** {expectation}",
             "",
             "```",
-            buf.getvalue().strip(),
+            explain(qs[name](spark, sf_dir)).strip(),
             "```",
             "",
         ]
-    with open("/root/repo/docs/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "docs", "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote docs/PLANS.md ({len(SHOWCASE)} plans)")
+
+
+def write_queries(spark, sf_dir: str, out_dir: str, tag: str, names: list[str]) -> None:
+    import bench
+
+    queries = bench.build_queries(spark)
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        text = explain(queries[name](spark, sf_dir))
+        for pattern, mask in RUN_IDS:
+            text = pattern.sub(mask, text)
+        path = os.path.join(out_dir, f"{name}_{tag}.txt")
+        with open(path, "w") as f:
+            f.write(text)
+        print(f"wrote {path} ({len(text)} chars)", flush=True)
+        release_scoped_caches()
+        spark.catalog.clearCache()
+
+
+def main() -> None:
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("queries", nargs="*", help="bench.build_queries names")
+    ap.add_argument("--out", help="directory for <query>_<tag>.txt")
+    ap.add_argument("--tag", help="file-name suffix, e.g. before/after")
+    args = ap.parse_args()
+    if args.queries and not (args.out and args.tag):
+        ap.error("query names need --out and --tag")
+    if args.queries:
+        spark = get_spark("dump-plans")
+        spark.sparkContext.setLogLevel("ERROR")
+        write_queries(spark, SF_DIR, args.out, args.tag, args.queries)
+    else:
+        spark = get_spark("plans", shuffle_partitions=8)
+        spark.sparkContext.setLogLevel("ERROR")
+        write_showcase(spark, SF_DIR)
 
 
 if __name__ == "__main__":

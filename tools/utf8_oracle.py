@@ -98,7 +98,8 @@ def exact_dedup_survivors(docs: list[tuple[int, str]]) -> list[tuple]:
 
 def gram_hashes(text: str, n: int = 5) -> set[int]:
     """Distinct 31-ary codepoint-polynomial n-gram hashes mod P31 —
-    ext/dedup.portable_gram_hashes (right-padded to n with spaces)."""
+    ext/dedup.portable_gram_hashes_from_cp over portable_codepoints
+    (right-padded to n with spaces)."""
     s = norm_text(text)
     if len(s) < n:
         s = s.ljust(n, " ")
